@@ -4,10 +4,10 @@ import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets.UTF_8
 
-/** Arrow Flight PROTOCOL messages on the wire — the last offline-buildable
-  * slice of the reference's gRPC surface (Producer.java:86-510 serves
-  * FlightInfo/FlightData over grpc-java; App.java wires the server). This
-  * environment ships no arrow-flight or grpc jars and no unshaded
+/** Arrow Flight PROTOCOL messages on the wire — the payloads of the
+  * reference's gRPC surface (Producer.java:86-510 serves FlightInfo/
+  * FlightData over grpc-java; App.java wires the server). The build
+  * ships no arrow-flight or grpc jars and no unshaded
   * protobuf-java (only ORC/Spark-Connect shaded copies, which are private
   * API), so the protobuf WIRE FORMAT is hand-rolled here from the public
   * spec: a protobuf message is a sequence of (field-number, wire-type)
@@ -27,10 +27,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   *  - `FlightData { flight_descriptor=1, data_header=2 (bytes: the
   *    flatbuffer Message), app_metadata=3 (bytes), data_body=1000 (bytes) }`
   *
-  * With these frames riding [[IpcTransport]]'s length-prefixed socket, the
-  * one delta left to a real `arrow-flight` client is the HTTP/2/gRPC
-  * session layer itself (documented in COVERAGE.md §2.6) — every byte of
-  * the Flight payloads is already wire-exact.
+  * [[FlightGrpc]] carries these messages over gRPC/HTTP/2; every byte of
+  * the Flight payloads is wire-exact.
   */
 object FlightProto {
 
@@ -396,7 +394,7 @@ object FlightProto {
   }
 
   /** True iff this encapsulated message is a Schema header — the start of
-    * a new logical stream (FPUT uses it to find partition boundaries). */
+    * a new logical stream (DoPut uses it to find partition boundaries). */
   def isSchemaMessage(m: IpcMessage): Boolean =
     org.apache.arrow.flatbuf.Message.getRootAsMessage(
       ByteBuffer.wrap(m.metadata).order(ByteOrder.LITTLE_ENDIAN))

@@ -9,16 +9,14 @@ import org.apache.spark.sql.functions.{array, col}
 import org.apache.spark.sql.types.{StringType, StructType}
 
 /** The Flight SERVICE itself — catalog, ingest, ticketed jobs, actions —
-  * factored out of the transport so the same semantics ride BOTH wire
-  * layers: the dependency-free framed-TCP protocol ([[IpcTransport]]) and
-  * the real gRPC-over-HTTP/2 session layer ([[FlightGrpc]]). This mirrors
-  * the reference's own layering: Producer.java:86-510 implements the verbs
-  * once and arrow-flight's gRPC bindings carry them; here the verbs live
-  * in one class and two transports carry them.
+  * factored out of the gRPC-over-HTTP/2 session layer ([[FlightGrpc]]).
+  * This mirrors the reference's own layering: Producer.java:86-510
+  * implements the verbs once and arrow-flight's gRPC bindings carry them.
+  * One instance may front several listeners (a plain and a TLS
+  * [[FlightGrpc.Server]] sharing one catalog and job registry).
   *
   * Every method either returns a value or THROWS with a message — the
-  * transports translate failures into their own error frames (an `ERR`
-  * control line, or a non-zero `grpc-status` trailer).
+  * transport translates failures into a non-zero `grpc-status` trailer.
   */
 final class FlightService(val spark: SparkSession) {
   private val tables = TrieMap.empty[String, DataFrame]
@@ -118,9 +116,6 @@ final class FlightService(val spark: SparkSession) {
         FlightProto.Ticket.of(name),
         Seq(FlightProto.Location(locationUri)))),
       totalRecords = -1L, totalBytes = -1L)
-
-  private def groupStreams(msgs: Seq[FlightProto.IpcMessage]): Seq[Array[Byte]] =
-    FlightProto.groupStreams(msgs)
 
   // -------------------------- per-partition endpoints (parallel readers)
   // Flight's scale model: GetFlightInfo returns one endpoint PER
@@ -301,10 +296,7 @@ final class FlightService(val spark: SparkSession) {
       appendSchemaDdl.get(name).foreach(d =>
         Predef.require(d == schema.toDDL,
           s"append schema drift for $name: ${schema.toDDL} != $d"))
-      import spark.implicits._
-      val df = ArrowIpc.fromIpcStreams(
-          spark.createDataset(FlightProto.groupStreams(msgs)), schema)
-        .localCheckpoint(true)
+      val df = materialize(msgs, schema)
       val dir = java.nio.file.Files
         .createTempDirectory("graft_flight_append_").toFile
       stagedDirs.add(dir)
@@ -358,34 +350,25 @@ final class FlightService(val spark: SparkSession) {
         FlightProto.IpcMessage(fd.dataHeader, fd.dataBody)
     }
 
-  /** acceptPut with the schema taken from the wire itself. */
-  def ingestFlightData(name: String,
-                       msgs: Seq[FlightProto.IpcMessage]): Long =
-    ingestFlightData(name,
-      FlightService.sparkSchemaOfStream(msgs).toDDL, msgs)
-
-  /** DoExchange with the schema taken from the wire itself. */
-  def exchange(frames: Seq[FlightProto.FlightData]): DataFrame =
-    exchange(FlightService.sparkSchemaOfStream(ipcMessages(frames)).toDDL,
-      frames)
-
-  /** Graph-part put with the schema taken from the wire itself. */
-  def putGraphPart(frames: Seq[FlightProto.FlightData]): Long =
-    putGraphPart(FlightService.sparkSchemaOfStream(ipcMessages(frames)).toDDL,
-      frames)
-
-  /** Ingest raw per-partition IPC stream blobs as flight `name`.
-    * Materializes NOW: ingest must fail on this request (bad schema,
-    * ragged batch), not on a later reader's action. Returns row count. */
-  def ingestBlobs(name: String, ddl: String,
-                  blobs: Seq[Array[Byte]]): Long = {
-    val schema = StructType.fromDDL(ddl)
+  /** Uploaded IPC messages (Schema headers delimit the per-partition
+    * streams) as a DataFrame, materialized NOW: an upload must fail on
+    * this request (bad schema, ragged batch), not on a later reader's
+    * action. */
+  private def materialize(msgs: Seq[FlightProto.IpcMessage],
+                          schema: StructType): DataFrame = {
     import spark.implicits._
-    val df = ArrowIpc.fromIpcStreams(spark.createDataset(blobs), schema)
+    ArrowIpc.fromIpcStreams(
+        spark.createDataset(FlightProto.groupStreams(msgs)), schema)
       .localCheckpoint(true)
-    register(name, df) // invalidates any staging of the PREVIOUS upload
-    df.count()
   }
+
+  /** [[materialize]] under the wire's leading Schema message, normalized
+    * through its DDL the way a spilled put's is ([[ingestSpilledPut]]
+    * takes the DDL), so a small and a large upload of one stream register
+    * the same schema. */
+  private def materialize(msgs: Seq[FlightProto.IpcMessage]): DataFrame =
+    materialize(msgs,
+      StructType.fromDDL(FlightService.sparkSchemaOfStream(msgs).toDDL))
 
   /** acceptPut of a LARGE upload the transport spilled to disk: `dir`
     * holds the decoded per-stream `.arrows` files (exactly the framing
@@ -430,15 +413,11 @@ final class FlightService(val spark: SparkSession) {
     }
   }
 
-  /** acceptPut: a FlightData message stream (Schema headers delimit the
-    * per-partition IPC streams) ingests as flight `name`. */
-  def ingestFlightData(name: String, ddl: String,
+  /** acceptPut: a FlightData message stream ingests as flight `name`;
+    * returns the row count. */
+  def ingestFlightData(name: String,
                        msgs: Seq[FlightProto.IpcMessage]): Long = {
-    val schema = StructType.fromDDL(ddl)
-    import spark.implicits._
-    val df = ArrowIpc.fromIpcStreams(
-        spark.createDataset(groupStreams(msgs)), schema)
-      .localCheckpoint(true)
+    val df = materialize(msgs)
     register(name, df) // invalidates any staging of the PREVIOUS upload
     df.count()
   }
@@ -449,21 +428,14 @@ final class FlightService(val spark: SparkSession) {
     * descriptor's wire-codec CypherMessage runs over them, the result
     * streams back in the same call — transform-in-flight, no named
     * flight ever registered. */
-  def exchange(ddl: String,
-               frames: Seq[FlightProto.FlightData]): DataFrame = {
+  def exchange(frames: Seq[FlightProto.FlightData]): DataFrame = {
     val desc = frames.headOption.flatMap(_.descriptor)
       .getOrElse(throw new IllegalArgumentException(
         "first FlightData must carry a CMD descriptor"))
     Predef.require(desc.dtype == FlightProto.DescriptorType.Cmd,
       "descriptor must be CMD (a serialized CypherMessage)")
     val msg = ActionMessages.CypherMessage.deserialize(desc.cmd)
-    val msgs = ipcMessages(frames)
-    val schema = StructType.fromDDL(ddl)
-    import spark.implicits._
-    val inputDf = ArrowIpc.fromIpcStreams(
-        spark.createDataset(groupStreams(msgs)), schema)
-      .localCheckpoint(true)
-    inputDf.createOrReplaceTempView("input")
+    materialize(ipcMessages(frames)).createOrReplaceTempView("input")
     spark.sql(msg.cypher).localCheckpoint(true)
   }
 
@@ -474,19 +446,13 @@ final class FlightService(val spark: SparkSession) {
     * by its own key vocabulary (source_field ⇒ rels). Field names from
     * the message rename to the canonical columns, and the graph
     * registers once both halves have arrived. Returns row count. */
-  def putGraphPart(ddl: String,
-                   frames: Seq[FlightProto.FlightData]): Long = {
+  def putGraphPart(frames: Seq[FlightProto.FlightData]): Long = {
     val desc = frames.headOption.flatMap(_.descriptor)
       .getOrElse(throw new IllegalArgumentException(
         "first FlightData must carry a descriptor"))
     Predef.require(desc.dtype == FlightProto.DescriptorType.Cmd,
       "descriptor must be CMD (a serialized write message)")
-    val msgs = ipcMessages(frames)
-    val schema = StructType.fromDDL(ddl)
-    import spark.implicits._
-    val df = ArrowIpc.fromIpcStreams(
-        spark.createDataset(groupStreams(msgs)), schema)
-      .localCheckpoint(true)
+    val df = materialize(ipcMessages(frames))
     // the CMD is either the write message itself or a serialized Ticket
     // from a prior gds.write.* action (the reference client's flow)
     val cmdBytes = resolveWriteCmd(desc.cmd)
@@ -537,9 +503,9 @@ final class FlightService(val spark: SparkSession) {
     FlightProto.ActionType("gds.write.relationships",
       "Ticket a graph rel-write; stream the rows via DoPut on the ticket"))
 
-  /** Action bodies arrive in two encodings: our transports send the raw
-    * ticket string; the reference's client sends a serialized Ticket
-    * PROTOBUF (neo4j_arrow.py:287-294 `status` passes
+  /** Action bodies arrive in two encodings: `doAction` with the ticket
+    * text sends the raw string; the reference's client sends a
+    * serialized Ticket PROTOBUF (neo4j_arrow.py:287-294 `status` passes
     * `ticket.serialize()`). Sniff: a proto Ticket decodes to field 1
     * bytes; raw strings fail the proto walk (or yield no field-1
     * payload) and pass through verbatim. The proto reading wins only
@@ -667,8 +633,9 @@ final class FlightService(val spark: SparkSession) {
   }
 
   /** A gds.write DoPut's CMD payload is either the write message itself
-    * (our transports) or a serialized Ticket from a prior gds.write.*
-    * action (the reference's flow) — resolve to the message bytes. */
+    * (our client's `doPutGraphPart`) or a serialized Ticket from a prior
+    * gds.write.* action (the reference's flow) — resolve to the message
+    * bytes. */
   private[sources] def resolveWriteCmd(cmd: Array[Byte]): Array[Byte] = {
     val asTicket =
       try {
@@ -685,22 +652,6 @@ final class FlightService(val spark: SparkSession) {
       } catch { case scala.util.control.NonFatal(_) => None }
     asTicket.getOrElse(cmd)
   }
-
-  /** Run a registered flight as a ticketed job; returns the ticket. */
-  def submit(name: String): String = {
-    val df = require(name)
-    import scala.concurrent.ExecutionContext.Implicits.global
-    graft.operators.Jobs.submit(df).ticket
-  }
-
-  /** The Status as rendered by Scala (`Pending`/`Producing`/`Complete`/
-    * `Cancelled`/`Error(…)`) — the gRPC job.status action uppercases it
-    * at its own layer; throws for an unknown ticket. */
-  def status(ticket: String): String =
-    graft.operators.Jobs.status(ticket) match {
-      case Some(st) => st.toString
-      case None => throw new NoSuchElementException("unknown ticket")
-    }
 
   /** Cancel a job (the reference's Job.cancel(true), Producer.java:
     * 133-136): CANCELLED if this call stopped it, ALREADY_DONE if the
@@ -726,23 +677,24 @@ object FlightService {
   }
   /** Spark schema decoded from a stream's LEADING Arrow Schema message —
     * how a real Flight stream carries its schema (no side-channel DDL;
-    * the gRPC transport uses this on both ends, while the framed-TCP
-    * protocol keeps its explicit-DDL contract for forensic symmetry with
-    * INFO). */
+    * the gRPC transport uses this on both ends). */
   def sparkSchemaOfStream(
       msgs: Seq[FlightProto.IpcMessage]): StructType = {
     val first = msgs.headOption.getOrElse(
       throw new IllegalArgumentException("empty Flight stream"))
     require(FlightProto.isSchemaMessage(first),
       "stream does not start with a Schema message")
-    val bytes = FlightProto.joinIpcStream(Seq(first))
-    val arrowSchema =
+    sparkSchemaOf(FlightProto.joinIpcStream(Seq(first)))
+  }
+
+  /** Spark schema of an IPC-encapsulated Arrow Schema message — the bytes
+    * FlightInfo.schema and SchemaResult.schema carry. */
+  def sparkSchemaOf(schemaBytes: Array[Byte]): StructType =
+    ArrowIpcSource.sparkSchema(
       org.apache.arrow.vector.ipc.message.MessageSerializer.deserializeSchema(
         new org.apache.arrow.vector.ipc.ReadChannel(
           java.nio.channels.Channels.newChannel(
-            new java.io.ByteArrayInputStream(bytes))))
-    ArrowIpcSource.sparkSchema(arrowSchema)
-  }
+            new java.io.ByteArrayInputStream(schemaBytes)))))
 
   /** One pushed-down predicate riding an opaque DoGet ticket. `lit` is
     * typed-encoded: `l:<long>`, `d:<double>`, `s:<url-base64 utf8>`, or

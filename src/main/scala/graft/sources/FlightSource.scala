@@ -41,14 +41,8 @@ class FlightSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val (host, port, token, flight) = FlightSource.opts(options)
     val cli = new FlightGrpc.Client(host, port, token)
-    try {
-      val schemaBytes = cli.getSchema(flight)
-      ArrowIpcSource.sparkSchema(
-        org.apache.arrow.vector.ipc.message.MessageSerializer
-          .deserializeSchema(new org.apache.arrow.vector.ipc.ReadChannel(
-            java.nio.channels.Channels.newChannel(
-              new ByteArrayInputStream(schemaBytes)))))
-    } finally cli.close()
+    try FlightService.sparkSchemaOf(cli.getSchema(flight))
+    finally cli.close()
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],

@@ -48,14 +48,18 @@ object TpchGraph {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    // r12 (ADVICE r11): fold the file's mtime+size into the key so a
-    // parquet regenerated in-place within one JVM (testdata rebuild, SF
-    // switch reusing a dir) can never silently read through a stale
-    // schema — the memo entry just misses and re-infers. One local stat
-    // call; directories (multi-file tables) stat the dir, whose mtime
-    // changes on any file add/replace.
+    // Fold the file's mtime+size into the key so a parquet regenerated
+    // in-place within one JVM (testdata rebuild, SF switch reusing a dir)
+    // can never silently read through a stale schema — the memo entry
+    // just misses and re-infers. A directory's own mtime changes only
+    // when an entry is added, removed or renamed, not when a part file
+    // is overwritten in place, so directories (multi-file tables) also
+    // fold in the newest mtime among their files (one listFiles pass).
     val f = new java.io.File(path)
-    val key = path + "|" + f.lastModified + "|" + f.length + "|nanos=" +
+    val newestPart = Option(f.listFiles)
+      .flatMap(_.map(_.lastModified).maxOption).getOrElse(0L)
+    val key = path + "|" + f.lastModified + "|" + f.length + "|" +
+      newestPart + "|nanos=" +
       spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
     val schema = schemaCache.computeIfAbsent(key,
       _ => spark.read.parquet(path).schema)

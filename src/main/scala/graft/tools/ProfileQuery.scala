@@ -14,6 +14,17 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.tools.ProfileQuery <q1,q2,...> [runs]
   */
 object ProfileQuery {
+  /** `k1=v1;k2=v2` → pairs. Blank segments (a trailing `;`) are skipped;
+    * a segment without `=` is rejected by name rather than half-applied. */
+  def parseExtraConf(s: String): Seq[(String, String)] =
+    s.split(";").toSeq.filter(_.trim.nonEmpty).map { kv =>
+      kv.indexOf('=') match {
+        case -1 => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_EXTRA_CONF segment '$kv' is not key=value")
+        case i => kv.substring(0, i) -> kv.substring(i + 1)
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val runs = if (args.length > 1) args(1).toInt else 1
@@ -29,10 +40,8 @@ object ProfileQuery {
       .config("spark.ui.enabled", "false")
     // r12: ad-hoc A/B experiments (e.g. streaming state-store provider)
     // without touching gate code — semicolon-separated k=v pairs
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k, v)
-    })
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(parseExtraConf(_)
+      .foreach { case (k, v) => builder.config(k, v) })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -5,15 +5,14 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{ActionMessages, FlightGrpc, FlightProto}
+import graft.sources.{ActionMessages, FlightGrpc, FlightProto, FlightService}
 
 /** End-to-end exercise of the REAL gRPC/HTTP/2 Flight transport
   * (sources/FlightGrpc): every RPC rides Netty's HTTP/2 codec on the
   * loopback — connection preface, SETTINGS, HPACK, stream multiplexing
   * and flow-control windows are all the genuine article, with gRPC's
-  * length-prefixed message framing and grpc-status trailers on top.
-  * This closes the layer the framed-TCP transport (IpcTransportSpec)
-  * stubbed: what a grpc-java Flight client speaks on the wire. */
+  * length-prefixed message framing and grpc-status trailers on top:
+  * what a grpc-java Flight client speaks on the wire. */
 class FlightGrpcSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -85,6 +84,23 @@ class FlightGrpcSpec extends AnyFunSuite {
           fi.schema))
         val e = intercept[FlightGrpc.GrpcException](c.getFlightInfo("nope"))
         assert(e.code == FlightGrpc.Status.NotFound)
+        // C4 catalog fidelity (Producer.java:411-437): every listed
+        // flight carries its exact column names and types (Arrow fields
+        // are all nullable), sorted by name, and GetFlightInfo has one
+        // endpoint per partition
+        val dims = (0L until 7L).map(i => (i, s"d$i")).toDF("k", "label")
+        srv.register("dims", dims.repartition(3))
+        val listed = c.listFlights()
+        assert(listed.map(_.descriptor.path) == Seq(Seq("dims"), Seq("people")))
+        def cols(t: org.apache.spark.sql.types.StructType) =
+          t.fields.map(f => f.name -> f.dataType.sql).toSeq
+        val types = listed.map(f => f.descriptor.path.head ->
+          cols(FlightService.sparkSchemaOf(f.schema))).toMap
+        assert(types == Map("dims" -> cols(dims.schema),
+          "people" -> cols(sample.schema)))
+        listed.foreach(f => assert(java.util.Arrays.equals(
+          c.getSchema(f.descriptor.path.head), f.schema)))
+        assert(c.getFlightInfo("dims").endpoints.size == 3)
       }
     }
   }
@@ -95,12 +111,12 @@ class FlightGrpcSpec extends AnyFunSuite {
       withClient(srv) { c =>
         val n = c.doPut("people_put", sample.repartition(4))
         assert(n == 500L)
+        assert(c.listFlights().map(_.descriptor.path) ==
+          Seq(Seq("people_put")))
         val back = c.doGet(spark, "people_put")
         assert(back.schema.fieldNames.toSeq == Seq("id", "name", "vec"))
-        val a = back.select($"id", $"name", $"vec"(2).as("v2"))
-          .as[(Long, String, Double)].collect().toSet
-        val b = sample.select($"id", $"name", $"vec"(2).as("v2"))
-          .as[(Long, String, Double)].collect().toSet
+        val a = back.as[(Long, String, Seq[Double])].collect().toSet
+        val b = sample.as[(Long, String, Seq[Double])].collect().toSet
         assert(a == b)
       }
     }
@@ -151,6 +167,21 @@ class FlightGrpcSpec extends AnyFunSuite {
         // job.cancel on a terminal job loses the race, non-destructively
         assert(c.doAction("job.cancel", ticket).asString == "ALREADY_DONE")
         assert(c.doAction("job.status", ticket).asString == "COMPLETE")
+        // job.submit runs a registered flight as a ticketed job
+        val jt = c.submitJob("job.submit", "people".getBytes(UTF_8))
+        var jst = c.jobStatus(jt)
+        while (jst != "COMPLETE" && jst != "ERROR" &&
+            System.nanoTime() < deadline) {
+          Thread.sleep(50)
+          jst = c.jobStatus(jt)
+        }
+        assert(jst == "COMPLETE")
+        // unknown tickets are NOT_FOUND for status and cancel alike
+        Seq("job.status", "job.cancel").foreach { a =>
+          val e = intercept[FlightGrpc.GrpcException](
+            c.doAction(a, "no-such"))
+          assert(e.code == FlightGrpc.Status.NotFound)
+        }
       }
     }
   }
@@ -272,17 +303,19 @@ class FlightGrpcSpec extends AnyFunSuite {
       srv.register("people", sample)
       srv.register("people2", sample.withColumn("id", $"id" + 1000L))
       withClient(srv) { c =>
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        try {
-          val f1 = pool.submit(new java.util.concurrent.Callable[Long] {
-            def call(): Long = c.doGet(spark, "people").count()
-          })
-          val f2 = pool.submit(new java.util.concurrent.Callable[Long] {
-            def call(): Long = c.doGet(spark, "people2").count()
-          })
-          assert(f1.get(120, java.util.concurrent.TimeUnit.SECONDS) == 500L)
-          assert(f2.get(120, java.util.concurrent.TimeUnit.SECONDS) == 500L)
-        } finally pool.shutdownNow()
+        withClient(srv) { other => // and a second connection alongside
+          val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+          def count(cl: FlightGrpc.Client, name: String) =
+            pool.submit(new java.util.concurrent.Callable[Long] {
+              def call(): Long = cl.doGet(spark, name).count()
+            })
+          try {
+            val fs = Seq(count(c, "people"), count(c, "people2"),
+              count(other, "people"))
+            fs.foreach(f => assert(
+              f.get(120, java.util.concurrent.TimeUnit.SECONDS) == 500L))
+          } finally pool.shutdownNow()
+        }
       }
     }
   }
@@ -301,21 +334,21 @@ class FlightGrpcSpec extends AnyFunSuite {
     }
   }
 
-  test("the gRPC transport and the framed-TCP transport can front ONE " +
-      "shared service: put via gRPC, read via framed TCP") {
-    val tcp = new graft.sources.IpcTransport.Server(spark, "sekrit").start()
-    val grpc = new FlightGrpc.Server(spark, "sekrit",
-      sharedService = Some(tcp.service)).start()
+  test("two gRPC servers can front ONE shared service: put via one, " +
+      "read via the other") {
+    // the plain + TLS listener layout of FlightInteropServer
+    val first = new FlightGrpc.Server(spark, "sekrit").start()
+    val second = new FlightGrpc.Server(spark, "sekrit",
+      sharedService = Some(first.service)).start()
     try {
-      withClient(grpc) { gc =>
-        assert(gc.doPut("shared_t", sample) == 500L)
-        val tc = new graft.sources.IpcTransport.Client(
-          "127.0.0.1", tcp.port, "sekrit")
-        try {
-          assert(tc.listTables() == Seq("shared_t"))
-          assert(tc.get(spark, "shared_t").count() == 500L)
-        } finally tc.close()
+      withClient(first) { c1 =>
+        assert(c1.doPut("shared_t", sample) == 500L)
+        withClient(second) { c2 =>
+          assert(c2.listFlights().map(_.descriptor.path) ==
+            Seq(Seq("shared_t")))
+          assert(c2.doGet(spark, "shared_t").count() == 500L)
+        }
       }
-    } finally { grpc.close(); tcp.close() }
+    } finally { second.close(); first.close() }
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.FlightGrpc
+
 /** One shared local session for the whole suite (tests fork a single JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
@@ -28,5 +30,15 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** A gRPC Flight server over [[spark]] and one client dialled into it,
+    * both closed after `f`. */
+  def withFlight(f: (FlightGrpc.Server, FlightGrpc.Client) => Unit): Unit = {
+    val srv = new FlightGrpc.Server(spark, token = "sekrit").start()
+    try {
+      val c = new FlightGrpc.Client("127.0.0.1", srv.port, "sekrit")
+      try f(srv, c) finally c.close()
+    } finally srv.close()
   }
 }

@@ -19,6 +19,8 @@ QUERIES = os.environ.get("SCALING_QUERIES",
     "dag_levels,kcore,four_cycles,ktruss,dedup_clusters,lsh_recall,"
     "decontaminate,node2vec_walks,triangle_count")
 PARTS = os.environ.get("SCALING_PARTS", "64")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BF = os.path.join(REPO, "bench_full.json")
 
 def bench(cpus):
     env = dict(os.environ,
@@ -29,13 +31,19 @@ def bench(cpus):
                SPARK_GRAFT_BENCH_ONLY=QUERIES,
                SPARK_GRAFT_BENCH_RUNS=RUNS)
     subprocess.run(["sbt", "-batch", "runMain graft.Bench"], env=env,
-                   check=True, stdout=subprocess.DEVNULL,
+                   cwd=REPO, check=True, stdout=subprocess.DEVNULL,
                    stderr=subprocess.DEVNULL)
-    with open("bench_full.json") as f:
+    with open(BF) as f:
         return json.load(f)["queries"]
 
-t32 = bench(32)
-t8 = bench(8)
+# Bench rewrites bench_full.json on every run: keep the committed copy
+saved = open(BF).read()
+try:
+    t32 = bench(32)
+    t8 = bench(8)
+finally:
+    with open(BF, "w") as f:
+        f.write(saved)
 out = {
     "config": {"blowup": int(BLOWUP), "sf": "/root/testdata/sf0.1",
                "shuffle_partitions": int(PARTS), "runs_min_of": int(RUNS),
@@ -50,6 +58,6 @@ for q in sorted(t32):
         "sec_8cpu": s8, "sec_32cpu": s32,
         "speedup_32_over_8": round(s8 / s32, 2) if s8 and s32 else None,
     }
-with open("scaling_r12.json", "w") as f:
+with open(os.path.join(REPO, "scaling_r12.json"), "w") as f:
     json.dump(out, f, indent=1, sort_keys=True)
 print(json.dumps(out, indent=1, sort_keys=True))
